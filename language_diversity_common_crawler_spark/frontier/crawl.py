@@ -57,9 +57,8 @@ def discover_children(
     1..FANOUT, kept iff a 60-bit hash of the child is nonzero mod
     DISCOVERY_MOD. Stand-in for real outlink extraction — deterministic so
     the sequential oracle reproduces it; swap with an href-extracting
-    pandas UDF on real pages. Dedup is normally left to the seen-set
-    probe's cogroup shuffle (filter_unseen(dedupe=True)) — one exchange
-    instead of two."""
+    pandas UDF on real pages. Dedup is normally left to filter_unseen,
+    whose dedup aggregate is the round's one exchange."""
     base = F.regexp_replace(F.col(url_col), r"[?#].*$", "")
     children = F.array(
         *[F.concat(base, F.lit(f"/c{i}")) for i in range(1, DISCOVERY_FANOUT + 1)]
@@ -295,9 +294,6 @@ def init_crawl(spark: SparkSession, seeds: DataFrame, ckpt) -> None:
     hashed = seen.with_url_hashes(st.read(0, "frontier"), n_parts=N_PARTS)
     st.write(hashed.select("url_canon", "host", "part_id"), 0, "seen_delta")
     st.write(seen.build_bloom(hashed), 0, "bloom")
-    # probe-form state: pay the words conversion once at commit so every
-    # later probe of this snapshot skips it (seen.probe_bloom_jvm)
-    st.write(seen.bloom_words(st.read(0, "bloom")), 0, "bloom_words")
     st.write_manifest(
         0, {"round": 0, "n_frontier": n, "n_scheduled": 0, "n_new": n}
     )
@@ -308,7 +304,6 @@ def run_round(
     ckpt: str,
     budget: int = 3,
     rules: DataFrame | None = None,
-    use_bloom: bool = True,
     compact_every: int | None = 8,
 ) -> dict:
     """Execute the next crawl round from the latest committed snapshot;
@@ -335,13 +330,6 @@ def run_round(
     if compacted is None and deltas is None:
         deltas = st.read_seen_upto(prev)
 
-    def _full_seen() -> DataFrame:
-        if compacted is None:
-            return deltas
-        if deltas is None:
-            return compacted
-        return compacted.unionByName(deltas)
-
     eligible = frontier
     if rules is not None:
         eligible = robots_mod.filter_allowed(eligible, rules)
@@ -356,34 +344,19 @@ def run_round(
 
     # host is a pure function of url_canon — drop it before the unseen
     # chain so the dedup exchange / anti-join / union move only the URL
-    # (filter_unseen's slim path), and re-attach it after with one regex
+    # (filter_unseen takes nothing else), and re-attach it after with one
+    # regex
     discovered = discover_children(sched).select("url_canon")
     cand = seen.with_url_hashes(discovered, n_parts=N_PARTS)
-    # incremental bloom: the committed filter already covers all prior
-    # rounds — never rebuilt from the (10^10-row) seen set
-    bloom = None          # bits form: merged into this round's commit
-    probe_filter = None   # words form when committed, else the bits form
-    if use_bloom:
-        if st.exists(prev, "bloom"):
-            bloom = st.read(prev, "bloom")
-            probe_filter = (
-                st.read(prev, "bloom_words")
-                if st.exists(prev, "bloom_words")
-                else bloom
-            )
-        else:
-            # fallback rebuild — persist so filter_unseen's auto-mode
-            # metadata read + the probe don't each re-scan the seen set
-            bloom = seen.build_bloom(
-                seen.with_url_hashes(_full_seen(), n_parts=N_PARTS)
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            probe_filter = bloom
+    # incremental bloom: every commit writes the filter covering all
+    # rounds so far — never rebuilt from the (10^10-row) seen set
+    bloom = st.read(prev, "bloom")
     # exact check: bucketed compacted table first (exchange-free big side),
     # then the small post-compaction deltas (AQE broadcasts them). The
     # committed bloom covers BOTH, so a URL seen only in a delta still
     # flags maybe_seen and is caught by the second anti-join.
     exact_base = compacted if compacted is not None else deltas
-    new = seen.filter_unseen(cand, exact_base, bloom=probe_filter, dedupe=True)
+    new = seen.filter_unseen(cand, exact_base, bloom)
     if compacted is not None and deltas is not None:
         new = new.join(deltas.select("url_canon"), "url_canon", "left_anti")
 
@@ -397,14 +370,10 @@ def run_round(
     )
     new_urls = st.read(k, "seen_delta")
 
-    if bloom is not None:
-        delta_bloom = seen.build_bloom(
-            seen.with_url_hashes(new_urls.select("url_canon"), n_parts=N_PARTS)
-        )
-        st.write(seen.merge_bloom(bloom, delta_bloom), k, "bloom")
-        # probe-form state for the NEXT round's filter_unseen (see
-        # init_crawl) — one conversion pass here instead of one per probe
-        st.write(seen.bloom_words(st.read(k, "bloom")), k, "bloom_words")
+    delta_bloom = seen.build_bloom(
+        seen.with_url_hashes(new_urls.select("url_canon"), n_parts=N_PARTS)
+    )
+    st.write(seen.merge_bloom(bloom, delta_bloom), k, "bloom")
 
     # per-partition lineage metrics for this round (scale observability:
     # one row per hash partition, not per URL), plus the committed bloom's
@@ -412,21 +381,12 @@ def run_round(
     lineage = new_urls.groupBy("part_id").agg(
         F.count(F.lit(1)).alias("n_new")
     )
-    if bloom is not None:
-        bstats = seen.bloom_stats(
-            st.read(k, "bloom")
-        ).withColumnRenamed("n_keys", "bloom_keys")
-        lineage = lineage.join(bstats, "part_id", "full_outer").withColumn(
-            "n_new", F.coalesce(F.col("n_new"), F.lit(0))
-        )
-    else:
-        # keep the metrics schema stable across use_bloom settings (the
-        # Iceberg backend writes into a fixed-schema table)
-        lineage = (
-            lineage.withColumn("bloom_keys", F.lit(None).cast("bigint"))
-            .withColumn("fill_ratio", F.lit(None).cast("double"))
-            .withColumn("est_fpp", F.lit(None).cast("double"))
-        )
+    bstats = seen.bloom_stats(
+        st.read(k, "bloom")
+    ).withColumnRenamed("n_keys", "bloom_keys")
+    lineage = lineage.join(bstats, "part_id", "full_outer").withColumn(
+        "n_new", F.coalesce(F.col("n_new"), F.lit(0))
+    )
     st.write(lineage.withColumn("round", F.lit(k)), k, "metrics")
 
     next_frontier = frontier.join(
@@ -513,10 +473,8 @@ def bench_state(spark: SparkSession, sf_dir: str, mult: int = 1,
         .select("url_canon")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # words (probe-form) state, as a crawl commit writes it — the timed
-    # round probes this directly (seen.probe_bloom_jvm), no conversion
-    bloom = seen.bloom_words(
-        seen.build_bloom(seen.with_url_hashes(pre_seen, n_parts=N_PARTS))
+    bloom = seen.build_bloom(
+        seen.with_url_hashes(pre_seen, n_parts=N_PARTS)
     ).persist(StorageLevel.MEMORY_AND_DISK)
     pre_seen.count()
     bloom.count()
@@ -544,16 +502,14 @@ def bench_round(
     if seeds_raw is None:
         n_seeds, seeds_raw = bench_seeds(spark, sf_dir, mult)
     # url-only projection: host is re-derived after the unseen chain
-    # (filter_unseen slim path — the dedup exchange carries just the URL)
+    # (filter_unseen's dedup exchange carries just the URL)
     seeds = urlgen.with_canonical(seeds_raw).select("url_canon")
 
     if state is None:
         state = bench_state(spark, sf_dir, mult, seeds_raw=seeds_raw)
     pre_seen, bloom = state
     cand = seen.with_url_hashes(seeds, n_parts=N_PARTS)
-    fresh = seen.filter_unseen(
-        cand, pre_seen, bloom=bloom, dedupe=True
-    ).select(
+    fresh = seen.filter_unseen(cand, pre_seen, bloom).select(
         "url_canon", urlgen.host_of_canon("url_canon").alias("host")
     )
 

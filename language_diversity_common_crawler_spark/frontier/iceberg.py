@@ -42,12 +42,8 @@ _SURFACE_SCHEMAS = {
     "frontier": "url_canon STRING, host STRING",
     "scheduled": "host STRING, url_canon STRING, priority BIGINT, slot INT",
     "seen_delta": "url_canon STRING, host STRING, part_id INT",
-    "bloom": ("part_id INT, bits BINARY, n_bits BIGINT, n_hashes INT, "
-              "n_keys BIGINT"),
-    # probe-form filter state (seen.WORDS_SCHEMA): converted once at
-    # commit so every later probe skips the bits->words pass
-    "bloom_words": ("part_id INT, words ARRAY<BIGINT>, n_bits BIGINT, "
-                    "n_hashes INT"),
+    "bloom": ("part_id INT, words ARRAY<BIGINT>, n_bits BIGINT, "
+              "n_hashes INT, n_keys BIGINT"),
     "metrics": ("part_id INT, n_new BIGINT, bloom_keys BIGINT, "
                 "fill_ratio DOUBLE, est_fpp DOUBLE"),
 }

@@ -5,18 +5,20 @@ Design for 10^10 URLs (SURVEY.md §4.3):
 
 - The bitset is **partitioned by hash range**: ``part_id = pmod(xxhash64(url),
   n_parts)``. Each partition owns an independent bloom filter over only its
-  keys, stored as one ``binary`` row. At 1% fpp, 10^10 keys need ~12 GB of
-  bitset total — partitioned over e.g. 4096 parts that is ~3 MB per task,
-  loaded only by the task probing that hash range. The preferred probe
-  (:func:`probe_bloom_jvm`) re-encodes each slice as ``array<bigint>``
-  words and tests membership in pure whole-stage-codegen arithmetic —
-  broadcast-joined (shuffle-free) for filter sets within the broadcast
-  budget, hash-range shuffle-hash join beyond it, with ZERO rows crossing
-  the Python boundary. Arrow fallbacks (cogrouped ``applyInArrow`` /
-  broadcast ``mapInArrow``) remain for non-power-of-two geometries.
+  keys, stored as one row whose ``words`` column is the bitset as
+  ``array<bigint>``: bit ``idx`` lives in word ``idx >> 6`` at in-word
+  position ``idx & 63``. At 1% fpp, 10^10 keys need ~12 GB of bitset
+  total — partitioned over e.g. 4096 parts that is ~3 MB per task.
 - Membership math is double hashing (Kirsch-Mitzenmacher): bit index
-  ``(h1 + i*h2) mod m`` for i in 0..k-1, fully vectorized in numpy over the
-  Arrow batch — no per-row Python (input_hint).
+  ``(h1 + i*h2) mod m`` for i in 0..k-1. The build vectorizes it in numpy
+  over each Arrow batch; the probe (:func:`probe_bloom`) evaluates it as
+  whole-stage-codegen integer arithmetic in the join projection, so no
+  candidate row crosses the Python boundary. The words side is
+  broadcast-joined (shuffle-free, fused with the upstream map stage) for
+  filter sets within ``BROADCAST_MAX_BYTES`` and shuffle-hash-joined on
+  ``part_id`` beyond it, where each task holds only its hash-range slices.
+  ``m`` is a power of two so the uint64 modulo is exact in signed JVM
+  arithmetic.
 - The bloom answer is only "definitely new" vs "maybe seen". Rows flagged
   maybe-seen go through an **exact** ``left_anti`` join against the seen-URL
   table; definitely-new rows skip that shuffle entirely. On a real crawl
@@ -24,8 +26,8 @@ Design for 10^10 URLs (SURVEY.md §4.3):
   URLs or brand-new — the bloom collapses the anti-join's probe side to the
   (small) maybe set, which is what makes the 10^10-row anti-join cheap.
 - Deletions (e.g. recrawl-after-TTL) can't come out of a bloom filter; the
-  :class:`CuckooFilter` variant supports ``delete`` and serializes to the
-  same per-partition ``binary`` row layout.
+  :class:`CuckooFilter` variant supports ``delete`` and serializes to one
+  ``binary`` row per partition.
 
 The reference has no URL-seen set at all (it re-reads whatever segment the
 config names, /root/reference/main.py:85-87); this module is the frontier
@@ -35,9 +37,7 @@ extension mandated by BASELINE.json's north rule.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,15 +58,23 @@ from ..plans.barrier import with_barrier_columns
 # must agree on this or probe against the wrong bitset slice
 N_PARTS = 64
 
+# filter sets up to this many bytes are broadcast to the probe (~2x10^8
+# keys at 1% fpp); larger ones take the shuffle-hash join on part_id
+BROADCAST_MAX_BYTES = 256 << 20
+
 BLOOM_SCHEMA = StructType(
     [
         StructField("part_id", IntegerType(), False),
-        StructField("bits", BinaryType(), False),
+        StructField("words", ArrayType(LongType(), False), False),
         StructField("n_bits", LongType(), False),
         StructField("n_hashes", IntegerType(), False),
         StructField("n_keys", LongType(), False),
     ]
 )
+
+# the only columns filter_unseen accepts: every one is a pure function of
+# the URL, so dedup may keep any survivor and h1/h2 may be recomputed
+_CANDIDATE_COLS = frozenset({"url_canon", "h1", "h2", "part_id"})
 
 
 def with_url_hashes(
@@ -103,38 +111,62 @@ def _u64_col(tbl: pa.Table, name: str) -> np.ndarray:
     return col.combine_chunks().to_numpy(zero_copy_only=False).view(np.uint64)
 
 
+# Arrow spelling of BLOOM_SCHEMA's words type (non-null elements)
+_WORDS_TYPE = pa.list_(pa.field("element", pa.int64(), nullable=False))
+
+
+def _bloom_row(
+    part_id: int, words: np.ndarray, n_bits: int, n_hashes: int, n_keys: int
+) -> pa.Table:
+    """One BLOOM_SCHEMA row as an Arrow table."""
+    return pa.table(
+        {
+            "part_id": pa.array([part_id], type=pa.int32()),
+            "words": pa.ListArray.from_arrays(
+                pa.array([0, words.size], type=pa.int32()),
+                pa.array(words, type=pa.int64()),
+                type=_WORDS_TYPE,
+            ),
+            "n_bits": pa.array([n_bits], type=pa.int64()),
+            "n_hashes": pa.array([n_hashes], type=pa.int32()),
+            "n_keys": pa.array([n_keys], type=pa.int64()),
+        }
+    )
+
+
 def build_bloom(
     hashed: DataFrame, n_bits_per_part: int = 1 << 20, n_hashes: int = 7
 ) -> DataFrame:
-    """Per-partition bloom filters from a hashed URL DataFrame.
+    """Per-partition bloom filters (BLOOM_SCHEMA) from a hashed URL
+    DataFrame.
 
     ``n_bits_per_part`` default (1 Mi bits = 128 KiB) holds ~100k keys/part
-    at ~1% fpp; size up with key count (m ≈ 9.6 n for 1% fpp).
+    at ~1% fpp; size up with key count (m ≈ 9.6 n for 1% fpp). It must be a
+    power of two ≥ 64: whole int64 words, and a modulo the JVM probe can
+    reproduce exactly.
 
     Arrow-native (``applyInArrow``): the grouped exchange carries only
     ``(part_id, h1, h2)`` — 20 bytes/row instead of full URL rows — and the
-    hash columns reach numpy as zero-copy views of the Arrow buffers; no
-    pandas conversion, no Python string objects.
+    hash columns reach numpy as zero-copy views of the Arrow buffers.
     """
-    n_bytes = (n_bits_per_part + 7) // 8
+    if n_bits_per_part < 64 or n_bits_per_part & (n_bits_per_part - 1):
+        raise ValueError(
+            f"build_bloom: n_bits_per_part={n_bits_per_part} must be a power "
+            "of two >= 64"
+        )
 
     def _build(tbl: pa.Table) -> pa.Table:
-        bits = np.zeros(n_bytes, dtype=np.uint8)
+        # bytes, little-endian: viewed as int64 words, bit idx lands in
+        # word idx >> 6 at position idx & 63
+        bits = np.zeros(n_bits_per_part // 8, dtype=np.uint8)
         h1 = _u64_col(tbl, "h1")
         h2 = _u64_col(tbl, "h2")
         for i in range(n_hashes):
             idx = _bit_indices(h1, h2, i, n_bits_per_part)
             np.bitwise_or.at(bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
-        return pa.table(
-            {
-                "part_id": pa.array(
-                    [tbl.column("part_id")[0].as_py()], type=pa.int32()
-                ),
-                "bits": pa.array([bits.tobytes()], type=pa.binary()),
-                "n_bits": pa.array([n_bits_per_part], type=pa.int64()),
-                "n_hashes": pa.array([n_hashes], type=pa.int32()),
-                "n_keys": pa.array([tbl.num_rows], type=pa.int64()),
-            }
+        return _bloom_row(
+            tbl.column("part_id")[0].as_py(), bits.view("<i8"),
+            n_bits_per_part, n_hashes, tbl.num_rows,
         )
 
     return (
@@ -148,60 +180,46 @@ def merge_bloom(a: DataFrame, b: DataFrame) -> DataFrame:
     """OR two compatible per-partition filter sets (e.g. snapshot + delta).
     Bloom filters of identical geometry merge by bitwise OR."""
 
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["n_bits"].nunique() > 1 or pdf["n_hashes"].nunique() > 1:
+    def _merge(tbl: pa.Table) -> pa.Table:
+        part_id = tbl.column("part_id")[0].as_py()
+        n_bits = set(tbl.column("n_bits").to_pylist())
+        n_hashes = set(tbl.column("n_hashes").to_pylist())
+        if len(n_bits) > 1 or len(n_hashes) > 1:
             raise ValueError(
-                "merge_bloom: incompatible filter geometries in part "
-                f"{int(pdf['part_id'].iloc[0])}: n_bits={set(pdf['n_bits'])} "
-                f"n_hashes={set(pdf['n_hashes'])} — merging filters with "
-                "different geometry would create false negatives"
+                f"merge_bloom: incompatible filter geometries in part "
+                f"{part_id}: n_bits={n_bits} n_hashes={n_hashes} — merging "
+                "filters with different geometry would create false negatives"
             )
-        arrs = [np.frombuffer(x, dtype=np.uint8) for x in pdf["bits"]]
-        merged = arrs[0].copy()
-        for x in arrs[1:]:
-            merged |= x
-        return pd.DataFrame(
-            {
-                "part_id": [int(pdf["part_id"].iloc[0])],
-                "bits": [merged.tobytes()],
-                "n_bits": [int(pdf["n_bits"].iloc[0])],
-                "n_hashes": [int(pdf["n_hashes"].iloc[0])],
-                "n_keys": [int(pdf["n_keys"].sum())],  # upper bound
-            }
+        words = (
+            tbl.column("words").combine_chunks().flatten()
+            .to_numpy(zero_copy_only=False).reshape(tbl.num_rows, -1)
+        )
+        return _bloom_row(
+            part_id, np.bitwise_or.reduce(words, axis=0), n_bits.pop(),
+            n_hashes.pop(),
+            sum(tbl.column("n_keys").to_pylist()),  # upper bound
         )
 
-    return a.unionByName(b).groupBy("part_id").applyInPandas(_merge, BLOOM_SCHEMA)
+    return a.unionByName(b).groupBy("part_id").applyInArrow(_merge, BLOOM_SCHEMA)
 
 
 def bloom_stats(bloom: DataFrame) -> DataFrame:
     """Per-partition filter health: (part_id, n_keys, fill_ratio, est_fpp).
 
-    ``est_fpp = fill_ratio ** n_hashes`` (probability all k probed bits are
-    set). Surfaced into each round's metrics snapshot so operators see the
-    seen-set saturating BEFORE false positives start silently dropping
-    genuinely-new URLs — the signal to re-shard with more/bigger
-    partitions."""
-
-    def _stats(batches):
-        for pdf in batches:
-            rows = []
-            for part_id, bits, n_bits, n_hashes, n_keys in zip(
-                pdf["part_id"], pdf["bits"], pdf["n_bits"],
-                pdf["n_hashes"], pdf["n_keys"],
-            ):
-                arr = np.frombuffer(bits, dtype=np.uint8)
-                fill = float(np.unpackbits(arr).sum()) / float(n_bits)
-                rows.append(
-                    (int(part_id), int(n_keys), fill, fill ** int(n_hashes))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["part_id", "n_keys", "fill_ratio", "est_fpp"],
-            )
-
-    return bloom.mapInPandas(
-        _stats,
-        "part_id int, n_keys long, fill_ratio double, est_fpp double",
+    ``fill_ratio = popcount(words) / n_bits``; ``est_fpp = fill_ratio **
+    n_hashes`` (probability all k probed bits are set). Surfaced into each
+    round's metrics snapshot so operators see the seen-set saturating
+    BEFORE false positives start silently dropping genuinely-new URLs — the
+    signal to re-shard with more/bigger partitions."""
+    set_bits = F.aggregate(
+        "words", F.lit(0).cast("long"), lambda acc, w: acc + F.bit_count(w)
+    )
+    fill = set_bits / F.col("n_bits")
+    return bloom.select(
+        "part_id",
+        "n_keys",
+        fill.alias("fill_ratio"),
+        F.pow(fill, F.col("n_hashes")).alias("est_fpp"),
     )
 
 
@@ -210,264 +228,13 @@ def _probe_hashes(
     h1: np.ndarray, h2: np.ndarray,
 ) -> np.ndarray:
     """Vectorized membership test of (h1, h2) key batches against one
-    bitset slice; shared by the cogroup and broadcast probe paths."""
+    bitset slice given as little-endian bytes (a words array viewed as
+    uint8) — the numpy form of :func:`_bloom_hit_expr`."""
     hit = np.ones(h1.size, dtype=bool)
     for i in range(n_hashes):
         idx = _bit_indices(h1, h2, i, n_bits)
         hit &= (bits[idx >> 3] & (1 << (idx & 7)).astype(np.uint8)) != 0
     return hit
-
-
-def collect_bloom(bloom: DataFrame) -> dict[int, tuple[bytes, int, int]]:
-    """Driver-side collect of a per-partition filter set:
-    ``{part_id: (bits, n_bits, n_hashes)}`` for broadcast probing.
-    Refuses unmerged snapshot+delta inputs (two rows per part) the same
-    way probe_bloom does — probing one row would lose the other's keys."""
-    out: dict[int, tuple[bytes, int, int]] = {}
-    for r in bloom.select("part_id", "bits", "n_bits", "n_hashes").collect():
-        p = int(r["part_id"])
-        if p in out:
-            raise ValueError(
-                f"collect_bloom: multiple filter rows for part_id {p} — "
-                "merge_bloom snapshot and delta first"
-            )
-        out[p] = (bytes(r["bits"]), int(r["n_bits"]), int(r["n_hashes"]))
-    return out
-
-
-def _dedupe_min_struct(
-    flagged: DataFrame, dedupe_on: str, cols: list[str]
-) -> DataFrame:
-    """Post-probe dedup for the map/join probe paths (broadcast + jvm):
-    a JVM hash aggregate keeping the deterministic ``min(struct(...))``
-    row per key — the same survivor the cogroup path's full-row sort
-    keeps. ``h1``/``h2`` are pure functions of ``dedupe_on``
-    (with_url_hashes contract), so they are dropped before the exchange
-    and recomputed after it; being group-constant they can never decide
-    the struct-min comparison, so the elected survivor is unchanged."""
-    hash_cols = [c for c in ("h1", "h2") if c in cols]
-    others = [
-        c for c in flagged.columns if c != dedupe_on and c not in hash_cols
-    ]
-    agged = (
-        flagged.drop(*hash_cols)
-        .groupBy(dedupe_on)
-        .agg(F.min(F.struct(*[F.col(c) for c in others])).alias("__rest"))
-        .select(dedupe_on, "__rest.*")
-    )
-    if hash_cols:
-        # identical recipe to with_url_hashes — group-constant, so exact
-        agged = agged.withColumn("h1", F.xxhash64(F.col(dedupe_on)))
-        agged = agged.withColumn(
-            "h2", F.xxhash64(F.col(dedupe_on), F.lit(1))
-        )
-    return agged.select(*cols, "maybe_seen")
-
-
-def probe_bloom_broadcast(
-    candidates: DataFrame,
-    bloom: DataFrame,
-    dedupe_on: str | None = None,
-) -> DataFrame:
-    """Broadcast-map variant of :func:`probe_bloom`: the whole per-partition
-    filter set is collected once, broadcast to executors, and probed in a
-    fused ``mapInArrow`` — a pure map stage, NO exchange. Catalyst fuses it
-    with the upstream canonicalize/hash projections, so the probe adds zero
-    shuffle to the round.
-
-    Scale boundary: broadcast is for filters that fit an executor-memory
-    budget — at 1% fpp that is ~2x10^8 keys per 256 MB. A 10^10-key set
-    (~12 GB of bitset) must keep the cogrouped :func:`probe_bloom`, where
-    each task loads only its ~3 MB hash-range slice.
-    :func:`filter_unseen` picks the path automatically from the filter's
-    metadata (``probe_mode="auto"``).
-
-    ``dedupe_on``: in the cogroup variant dedup rides the probe's own
-    shuffle; a map-only probe has no shuffle to ride, so dedup here is a
-    JVM hash aggregate AFTER the probe — the probe stays fused with the
-    upstream canonicalize/hash map stage, map-side partial aggregation
-    collapses duplicates early, and ``min(struct(...))`` keeps the
-    deterministic smallest row per key (the cogroup path keeps the same
-    row: it sorts by dedupe_on plus every other column in schema order
-    and takes the first occurrence). Shuffle-byte discipline: ``h1``/``h2``
-    are pure functions of ``dedupe_on`` (with_url_hashes contract — dedup
-    key IS the hashed column), so they are dropped before the exchange and
-    recomputed after it — 16 fewer bytes per row through the round's one
-    big shuffle; being group-constant they can never decide the struct-min
-    comparison, so the elected survivor row is unchanged."""
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(collect_bloom(bloom))
-
-    cols = candidates.columns
-
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
-    )
-
-    def _probe_batches(batches):
-        parts = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([batch]).combine_chunks()
-            pid = tbl.column("part_id").combine_chunks().to_numpy(
-                zero_copy_only=False
-            )
-            h1 = _u64_col(tbl, "h1")
-            h2 = _u64_col(tbl, "h2")
-            hit = np.zeros(tbl.num_rows, dtype=bool)
-            for p in np.unique(pid):
-                ent = parts.get(int(p))
-                if ent is None:
-                    continue  # no keys ever inserted in this hash range
-                mask = pid == p
-                hit[mask] = _probe_hashes(
-                    np.frombuffer(ent[0], dtype=np.uint8),
-                    ent[1], ent[2], h1[mask], h2[mask],
-                )
-            out = tbl.append_column("maybe_seen", pa.array(hit, type=pa.bool_()))
-            yield from out.to_batches()
-
-    flagged = candidates.mapInArrow(_probe_batches, out_schema)
-    if dedupe_on is None:
-        return flagged
-    return _dedupe_min_struct(flagged, dedupe_on, cols)
-
-
-def probe_bloom(
-    candidates: DataFrame,
-    bloom: DataFrame,
-    dedupe_on: str | None = None,
-) -> DataFrame:
-    """Flag each candidate row ``maybe_seen`` by probing its partition's
-    filter. Cogrouped on ``part_id`` so each task touches exactly one bitset
-    slice — the pattern that scales to a partitioned 10^10-key set.
-
-    ``candidates`` must carry (h1, h2, part_id) from :func:`with_url_hashes`.
-    Output = candidate columns + ``maybe_seen`` boolean.
-
-    ``dedupe_on``: optionally drop duplicate candidates by this column
-    inside the cogroup (keeps the lexicographically minimal row per key —
-    sorted by ``dedupe_on`` then every other column, so the survivor is
-    deterministic under retries and identical to broadcast-mode's
-    ``min(struct(...))``). A URL's partition is a function of the URL, so
-    per-partition dedup IS global dedup — and it rides the shuffle the
-    cogroup needs anyway, saving the separate dropDuplicates exchange.
-
-    Arrow-native (``applyInArrow``): candidate rows cross the Python
-    boundary as Arrow buffers and come back the same way — URL strings are
-    never materialized as Python/pandas objects, the hash columns feed
-    numpy as zero-copy views, and the output appends one boolean column to
-    the input table. This matters because the probe's cost at scale is
-    pure memory bandwidth across the Arrow boundary; cutting the
-    pandas<->Arrow conversion roughly halves the bytes touched per row
-    (BASELINE.md stage diagnosis: the probe is the weakest-scaling stage).
-    """
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
-    )
-
-    def _probe(cand: pa.Table, filt: pa.Table) -> pa.Table:
-        if dedupe_on is not None and cand.num_rows > 1:
-            # sort by ALL columns (dedupe_on first, rest in schema order):
-            # the surviving first row per key is then the lexicographically
-            # minimal row — the same row broadcast-mode's min(struct(...))
-            # keeps, and deterministic under task retries (a dedupe_on-only
-            # sort would keep an arbitrary arrival-order companion when
-            # duplicate keys carry differing other columns)
-            keys = [dedupe_on] + [
-                c for c in cand.column_names if c != dedupe_on
-            ]
-            cand = cand.sort_by(
-                [(c, "ascending") for c in keys]
-            ).combine_chunks()
-            col = cand.column(dedupe_on)
-            keep = np.ones(cand.num_rows, dtype=bool)
-            # first occurrence of each run in the sorted column survives
-            neq = pc.fill_null(
-                pc.not_equal(col.slice(1), col.slice(0, cand.num_rows - 1)),
-                True,
-            ).combine_chunks()
-            keep[1:] = neq.to_numpy(zero_copy_only=False)
-            cand = cand.filter(pa.array(keep))
-        cand = cand.combine_chunks()
-        if filt.num_rows == 0 or cand.num_rows == 0:
-            hit = np.zeros(cand.num_rows, dtype=bool)
-        elif filt.num_rows > 1:
-            raise ValueError(
-                f"probe_bloom: {filt.num_rows} filter rows for part_id "
-                f"{filt.column('part_id')[0].as_py()} — merge_bloom snapshot "
-                "and delta first (probing one row would silently lose the "
-                "other rows' keys)"
-            )
-        else:
-            hit = _probe_hashes(
-                np.frombuffer(filt.column("bits")[0].as_buffer(), dtype=np.uint8),
-                filt.column("n_bits")[0].as_py(),
-                filt.column("n_hashes")[0].as_py(),
-                _u64_col(cand, "h1"),
-                _u64_col(cand, "h2"),
-            )
-        return cand.append_column(
-            "maybe_seen", pa.array(hit, type=pa.bool_())
-        )
-
-    return (
-        candidates.groupBy("part_id")
-        .cogroup(bloom.groupBy("part_id"))
-        .applyInArrow(_probe, out_schema)
-    )
-
-
-WORDS_SCHEMA = StructType(
-    [
-        StructField("part_id", IntegerType(), False),
-        StructField("words", ArrayType(LongType(), False), False),
-        StructField("n_bits", LongType(), False),
-        StructField("n_hashes", IntegerType(), False),
-    ]
-)
-
-
-def bloom_words(bloom: DataFrame) -> DataFrame:
-    """Per-partition bitsets re-encoded as ``array<bigint>`` words for the
-    JVM probe: ``words[j]`` is the little-endian int64 view of bytes
-    ``8j..8j+7`` of the bitset, so bit ``idx`` lives in word ``idx >> 6``
-    at in-word position ``idx & 63`` — exactly the layout numpy's
-    ``bits[idx >> 3] |= 1 << (idx & 7)`` writes. Multiple rows per part
-    (snapshot + delta) are OR-merged here, riding the same grouped
-    exchange — the jvm probe therefore never needs a separate
-    ``merge_bloom`` pass."""
-
-    def _conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["n_bits"].nunique() > 1 or pdf["n_hashes"].nunique() > 1:
-            raise ValueError(
-                "bloom_words: incompatible filter geometries in part "
-                f"{int(pdf['part_id'].iloc[0])}: n_bits={set(pdf['n_bits'])} "
-                f"n_hashes={set(pdf['n_hashes'])} — merging filters with "
-                "different geometry would create false negatives"
-            )
-        n_bits = int(pdf["n_bits"].iloc[0])
-        if n_bits % 64:
-            raise ValueError(
-                f"bloom_words: n_bits={n_bits} is not a multiple of 64 — "
-                "the word encoding requires whole int64 words"
-            )
-        arrs = [np.frombuffer(x, dtype=np.uint8) for x in pdf["bits"]]
-        merged = arrs[0].copy()
-        for x in arrs[1:]:
-            merged |= x
-        words = np.frombuffer(merged.tobytes(), dtype="<i8")
-        return pd.DataFrame(
-            {
-                "part_id": [int(pdf["part_id"].iloc[0])],
-                "words": [words],
-                "n_bits": [n_bits],
-                "n_hashes": [int(pdf["n_hashes"].iloc[0])],
-            }
-        )
-
-    return bloom.groupBy("part_id").applyInPandas(_conv, WORDS_SCHEMA)
 
 
 def _bloom_hit_expr(n_bits: int, n_hashes: int, words_col: str):
@@ -486,7 +253,7 @@ def _bloom_hit_expr(n_bits: int, n_hashes: int, words_col: str):
         raise ValueError(
             f"_bloom_hit_expr: n_bits={n_bits} must be a power of two — "
             "uint64 modulo by a non-power-of-two cannot be reproduced "
-            "exactly in signed JVM arithmetic; use the cogroup probe"
+            "exactly in signed JVM arithmetic"
         )
     mask = n_bits - 1
     terms = []
@@ -502,94 +269,74 @@ def _bloom_hit_expr(n_bits: int, n_hashes: int, words_col: str):
     return F.coalesce(F.expr(" AND ".join(terms)), F.lit(False))
 
 
-def probe_bloom_jvm(
+def _geometry(bloom: DataFrame) -> tuple[int, int, int]:
+    """``(n_bits, n_hashes, total_bits)`` of a filter set, from one
+    metadata aggregate. Refuses what the probe would get wrong: an empty
+    set (no geometry), mixed geometries (merge_bloom first) and two rows
+    for one part (a duplicate part_id would duplicate candidate rows
+    through the probe join)."""
+    g = bloom.agg(
+        F.min("n_bits").alias("nb_min"),
+        F.max("n_bits").alias("nb_max"),
+        F.min("n_hashes").alias("nh_min"),
+        F.max("n_hashes").alias("nh_max"),
+        F.sum("n_bits").alias("total"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.countDistinct("part_id").alias("n_parts"),
+    ).collect()[0]
+    if g["total"] is None:
+        raise ValueError("bloom probe: empty filter set — no geometry to probe")
+    if g["nb_min"] != g["nb_max"] or g["nh_min"] != g["nh_max"]:
+        raise ValueError(
+            "bloom probe: mixed filter geometries "
+            f"(n_bits {g['nb_min']}..{g['nb_max']}, n_hashes "
+            f"{g['nh_min']}..{g['nh_max']}) — merge_bloom first"
+        )
+    if g["n_rows"] != g["n_parts"]:
+        raise ValueError(
+            f"bloom probe: filter set has {g['n_rows']} rows over "
+            f"{g['n_parts']} partitions — merge_bloom snapshot and delta "
+            "first (a duplicate part_id would duplicate candidate rows "
+            "through the probe join)"
+        )
+    return int(g["nb_min"]), int(g["nh_min"]), int(g["total"])
+
+
+def probe_bloom(
     candidates: DataFrame,
     bloom: DataFrame,
-    dedupe_on: str | None = None,
-    broadcast: bool | None = None,
-    broadcast_max_bytes: int = 256 << 20,
     geometry: tuple[int, int, int] | None = None,
 ) -> DataFrame:
-    """Fully JVM-side bloom probe: bitset slices re-encoded as
-    ``array<bigint>`` words (:func:`bloom_words`), joined to candidates on
-    ``part_id``, membership tested by :func:`_bloom_hit_expr` inside
-    whole-stage codegen. No Python/Arrow boundary in the probe itself —
-    BASELINE.md's stage diagnosis measured the Arrow cogroup probe as the
-    round's weakest-scaling stage (0.74: per-batch serialization is
-    bandwidth on the shared bus), and this path removes that boundary
-    entirely.
+    """Flag each candidate row ``maybe_seen``: the per-partition ``words``
+    are joined to candidates on ``part_id`` and membership is tested by
+    :func:`_bloom_hit_expr` inside whole-stage codegen. ``candidates`` must
+    carry (h1, h2, part_id) from :func:`with_url_hashes`. Output =
+    candidate columns + ``maybe_seen`` boolean.
 
-    Join strategy is the scale dial: for filter sets within
-    ``broadcast_max_bytes`` the words side is broadcast — the probe fuses
-    into the upstream map stage, zero exchange, like
-    :func:`probe_bloom_broadcast` but without the Python stage. A
-    10^10-key set (~12 GB of bitset over e.g. 4096 parts) exceeds the
-    budget and takes a shuffle-hash join on ``part_id`` instead: the same
-    hash-range-aligned exchange the cogroup probe pays, but the probe
-    math stays in codegen and each task's hash map holds only its ~3 MB
-    slices. The 8 KB+ words arrays never reach a downstream operator —
-    the projection consumes them inside the join stage.
+    Join strategy is the scale dial: a filter set within
+    ``BROADCAST_MAX_BYTES`` is broadcast — the probe fuses into the
+    upstream map stage, zero exchange. A 10^10-key set (~12 GB of bitset
+    over e.g. 4096 parts) exceeds executor memory and takes a shuffle-hash
+    join on ``part_id`` instead: each task's hash map holds only its ~3 MB
+    slices. The words arrays never reach a downstream operator — the
+    projection consumes them inside the join stage.
 
-    Requires single-geometry, power-of-two ``n_bits`` (a multiple of 64);
-    :func:`filter_unseen` auto-mode falls back to the Arrow paths
-    otherwise. ``geometry`` = precomputed ``(n_bits, n_hashes,
-    total_bits)`` to skip the metadata aggregate when the caller already
-    ran it.
-
-    ``bloom`` may be either the canonical binary form (converted here via
-    :func:`bloom_words`, which also OR-merges snapshot+delta rows) or an
-    already-converted WORDS form (a ``words`` column present) — the state
-    a crawl commit can write once so every later probe skips the
-    conversion pass. A words-form input must be pre-merged: one row per
-    ``part_id`` (a duplicate part would duplicate candidate rows through
-    the join; the geometry aggregate enforces this).
+    ``geometry`` = precomputed :func:`_geometry` result, to skip the
+    metadata aggregate when the caller already ran it.
 
     Candidates carrying a pre-existing ``maybe_seen`` column raise (the
     output barrier appends, it does not replace) — drop the stale flag
-    before a re-probe; the previous withColumn form silently produced a
-    duplicate-column select for that input, never a meaningful result."""
-    words_form = "words" in bloom.columns
-    if geometry is None:
-        g = bloom.agg(
-            F.min("n_bits").alias("nb_min"),
-            F.max("n_bits").alias("nb_max"),
-            F.min("n_hashes").alias("nh_min"),
-            F.max("n_hashes").alias("nh_max"),
-            F.sum("n_bits").alias("total"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("part_id").alias("n_parts"),
-        ).collect()[0]
-        if g["total"] is None:
-            raise ValueError(
-                "probe_bloom_jvm: empty filter set — no geometry to probe "
-                "(callers with possibly-empty state use filter_unseen, "
-                "which falls back)"
-            )
-        if g["nb_min"] != g["nb_max"] or g["nh_min"] != g["nh_max"]:
-            raise ValueError(
-                "probe_bloom_jvm: mixed filter geometries "
-                f"(n_bits {g['nb_min']}..{g['nb_max']}, n_hashes "
-                f"{g['nh_min']}..{g['nh_max']}) — merge_bloom first"
-            )
-        if words_form and g["n_rows"] != g["n_parts"]:
-            raise ValueError(
-                f"probe_bloom_jvm: words-form filter has {g['n_rows']} rows "
-                f"over {g['n_parts']} partitions — a duplicate part_id would "
-                "duplicate candidate rows through the probe join; pass the "
-                "binary form (bloom_words merges) or pre-merge the state"
-            )
-        geometry = (int(g["nb_min"]), int(g["nh_min"]), int(g["total"]))
-    n_bits, n_hashes, total_bits = geometry
-    if broadcast is None:
-        broadcast = total_bits // 8 <= broadcast_max_bytes
-
+    before a re-probe."""
+    n_bits, n_hashes, total_bits = geometry or _geometry(bloom)
     cols = candidates.columns
     if "__bf_words" in cols:
-        raise ValueError("probe_bloom_jvm: candidate column __bf_words collides")
-    w = (bloom if words_form else bloom_words(bloom)).select(
-        "part_id", F.col("words").alias("__bf_words")
+        raise ValueError("probe_bloom: candidate column __bf_words collides")
+    w = bloom.select("part_id", F.col("words").alias("__bf_words"))
+    side = (
+        F.broadcast(w)
+        if total_bits // 8 <= BROADCAST_MAX_BYTES
+        else w.hint("shuffle_hash")
     )
-    side = F.broadcast(w) if broadcast else w.hint("shuffle_hash")
     # maybe_seen goes through the no-op Generate barrier (plans/barrier.py):
     # a downstream filter(~maybe_seen) / filter(maybe_seen) would otherwise
     # be pushed below this projection with the whole probe expression
@@ -598,208 +345,56 @@ def probe_bloom_jvm(
     # single Filter method. Behind the barrier the probe is evaluated once
     # and downstream predicates see an attribute.
     joined = candidates.join(side, on="part_id", how="left")
-    flagged = with_barrier_columns(
+    return with_barrier_columns(
         joined,
         {"maybe_seen": _bloom_hit_expr(n_bits, n_hashes, "__bf_words")},
     ).select(*cols, "maybe_seen")
-    if dedupe_on is None:
-        return flagged
-    return _dedupe_min_struct(flagged, dedupe_on, cols)
 
 
 def filter_unseen(
-    candidates: DataFrame,
-    seen_urls: DataFrame,
-    bloom: DataFrame | None = None,
-    url_col: str = "url_canon",
-    dedupe: bool = False,
-    probe_mode: str = "auto",
-    broadcast_max_bytes: int = 256 << 20,
+    candidates: DataFrame, seen_urls: DataFrame, bloom: DataFrame
 ) -> DataFrame:
-    """Exact unseen set: bloom pre-filter (if given) then precise anti-join.
+    """Distinct candidate URLs not in ``seen_urls``: bloom probe, dedup,
+    then an exact anti-join of only the maybe-seen remainder.
 
-    ``seen_urls`` is the exact table (one ``url_canon`` column at minimum).
-    Definitely-new rows (bloom miss) bypass the anti-join shuffle; only the
-    maybe-seen remainder is joined. Without a bloom, plain ``left_anti``.
-    ``dedupe=True`` also drops duplicate candidate URLs (riding the probe's
-    cogroup shuffle, or a map-side-combinable hash aggregate in broadcast
-    mode — one exchange either way). When the candidate columns are EXACTLY
-    ``(url_col, h1, h2, part_id)`` — i.e. everything else was already
-    dropped and every remaining column is a pure function of the URL —
-    broadcast mode dedups BEFORE the probe on a slim (url, part_id)
-    projection, so the exchange carries no hash/struct payload at all and
-    the probe touches only distinct URLs. Callers with derivable companion
-    columns (host = host of url_canon) should drop them before this call
-    and recompute downstream (``urlgen.host_of_canon``).
+    ``candidates`` must be exactly ``with_url_hashes`` output over a
+    ``url_canon`` column: ``(url_canon, h1, h2, part_id)``. Callers with
+    derivable companion columns (host = host of url_canon) drop them
+    before this call and recompute downstream (``urlgen.host_of_canon``).
+    ``seen_urls`` is the exact table (one ``url_canon`` column at minimum);
+    ``bloom`` covers at least every URL in it.
 
-    ``probe_mode``: ``"jvm"`` (the preferred path) probes entirely in
-    whole-stage codegen via :func:`probe_bloom_jvm` — broadcast-joined and
-    shuffle-free within ``broadcast_max_bytes``, hash-range shuffle-hash
-    join beyond it; ``"broadcast"`` collects + broadcasts the whole filter
-    set and probes in a shuffle-free ``mapInArrow``; ``"cogroup"`` keeps
-    the hash-range-aligned Arrow cogroup where each task loads only its
-    slice; ``"auto"`` (default) reads the filter geometry and picks
-    ``jvm`` whenever the geometry supports it (single geometry,
-    power-of-two n_bits — true for every ``build_bloom`` default), else
-    sizes between broadcast and cogroup. The geometry check is a
-    column-pruned metadata scan for a storage-backed bloom; for a
-    COMPUTED bloom (``build_bloom(...)`` passed straight in) it executes
-    the build — auto/jvm therefore persist the bloom first so the probe
-    reuses the result instead of building twice. The default 256 MB
-    budget covers ~2x10^8 keys at 1% fpp; a 10^10-key frontier (~12 GB
-    of bitset) takes the shuffle-hash-join jvm probe.
+    Probe first, then dedup: the broadcast-join probe fuses into the
+    upstream canonicalize/hash map stage (zero exchange), so the round's
+    one big exchange is the dedup aggregate over (url, part_id,
+    maybe_seen) — every column a pure function of the URL, so any
+    dropDuplicates survivor is value-identical. h1/h2 are recomputed after
+    the exchange (with_url_hashes recipe, pruned away when the caller never
+    reads them). Measured at 2 pinned cores on 3M URLs: probe-first 9.9s
+    vs dedup-first 12.2s — dedup-first pays a post-exchange probe stage.
     """
-    if bloom is None:
-        if dedupe:
-            candidates = candidates.dropDuplicates([url_col])
-        return candidates.join(
-            seen_urls.select(url_col), on=url_col, how="left_anti"
-        )
-    if probe_mode not in ("auto", "broadcast", "cogroup", "jvm"):
+    if set(candidates.columns) != _CANDIDATE_COLS:
         raise ValueError(
-            f"probe_mode must be 'auto', 'jvm', 'broadcast' or 'cogroup', "
-            f"got {probe_mode!r} (a silent fallback would quietly discard "
-            "the plan shape the caller asked for)"
+            f"filter_unseen: candidates must have exactly columns "
+            f"{sorted(_CANDIDATE_COLS)}, got {candidates.columns} — drop "
+            "companion columns first and recompute them after the call"
         )
-    mode = probe_mode
-    words_form = "words" in bloom.columns
-    if words_form and probe_mode in ("broadcast", "cogroup"):
-        raise ValueError(
-            f"filter_unseen: probe_mode={probe_mode!r} needs the binary "
-            "filter form; a words-form (pre-converted) state only probes "
-            "via 'jvm'/'auto'"
-        )
-    geometry: tuple[int, int, int] | None = None
-    if mode in ("auto", "jvm"):
-        # the geometry check executes the bloom plan: cheap column-pruned
-        # metadata scan for a storage-backed bloom, but a FULL build for a
-        # computed one (build_bloom(...) passed straight in) — persist so
-        # the probe below reuses that work instead of building twice
-        bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
-        g = bloom.agg(
-            F.min("n_bits").alias("nb_min"),
-            F.max("n_bits").alias("nb_max"),
-            F.min("n_hashes").alias("nh_min"),
-            F.max("n_hashes").alias("nh_max"),
-            F.sum("n_bits").alias("total"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("part_id").alias("n_parts"),
-        ).collect()[0]
-        total_bits = g["total"]
-        jvm_ok = (
-            total_bits is not None
-            and g["nb_min"] == g["nb_max"]
-            and g["nh_min"] == g["nh_max"]
-            and int(g["nb_min"]) % 64 == 0
-            and int(g["nb_min"]) & (int(g["nb_min"]) - 1) == 0
-        )
-        if words_form and total_bits is not None and g["n_rows"] != g["n_parts"]:
-            raise ValueError(
-                f"filter_unseen: words-form filter has {g['n_rows']} rows "
-                f"over {g['n_parts']} partitions — pre-merge the state "
-                "(bloom_words merges the binary form)"
-            )
-        if words_form and not jvm_ok:
-            raise ValueError(
-                "filter_unseen: words-form state requires jvm-compatible "
-                f"geometry; got n_bits {g['nb_min']}..{g['nb_max']}, "
-                f"n_hashes {g['nh_min']}..{g['nh_max']}"
-            )
-        if jvm_ok:
-            geometry = (int(g["nb_min"]), int(g["nh_min"]), int(total_bits))
-        if mode == "jvm" and not jvm_ok:
-            raise ValueError(
-                "filter_unseen: probe_mode='jvm' needs a non-empty, "
-                "single-geometry filter set with power-of-two n_bits "
-                f"(multiple of 64); got n_bits {g['nb_min']}..{g['nb_max']}"
-                f", n_hashes {g['nh_min']}..{g['nh_max']} — use 'auto' to "
-                "fall back to the Arrow probe paths"
-            )
-        if mode == "auto":
-            if jvm_ok:
-                # the JVM probe wins at every filter size: broadcast-join
-                # (shuffle-free, codegen-fused) within the budget, hash-
-                # range shuffle-hash join beyond it — no Python boundary
-                mode = "jvm"
-            else:
-                mode = (
-                    "broadcast"
-                    if total_bits is not None
-                    and total_bits // 8 <= broadcast_max_bytes
-                    else "cogroup"
-                )
-    slim_cols = dedupe and set(candidates.columns) == {
-        url_col, "h1", "h2", "part_id"
-    }
-    jvm_bcast = (
-        mode == "jvm"
-        and geometry is not None
-        and geometry[2] // 8 <= broadcast_max_bytes
+    # the geometry check executes the bloom plan: cheap column-pruned
+    # metadata scan for a storage-backed bloom, but a FULL build for a
+    # computed one (build_bloom(...) passed straight in) — persist so
+    # the probe below reuses that work instead of building twice
+    bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
+    flagged = (
+        probe_bloom(candidates, bloom, _geometry(bloom))
+        .select("url_canon", "part_id", "maybe_seen")
+        .dropDuplicates(["url_canon"])
+        .withColumn("h1", F.xxhash64(F.col("url_canon")))
+        .withColumn("h2", F.xxhash64(F.col("url_canon"), F.lit(1)))
+        .select(*candidates.columns, "maybe_seen")
     )
-    if mode == "jvm" and slim_cols and jvm_bcast:
-        # PROBE-FIRST slim path: the broadcast-join jvm probe fuses into
-        # the upstream canonicalize/hash map stage (zero exchange), so
-        # probing BEFORE dedup costs nothing extra and the round keeps
-        # exactly ONE exchange — the dedup aggregate over
-        # (url, part_id, maybe_seen), every column a pure function of the
-        # URL, so any dropDuplicates survivor is value-identical
-        # (deterministic without a min(struct) ordering). Measured at 2
-        # pinned cores on 3M URLs: probe-first 9.9s vs dedup-first 12.2s
-        # vs Arrow cogroup 10.4s for the same prefix — dedup-first pays a
-        # post-exchange probe stage the fused ordering avoids. h1/h2 are
-        # recomputed after the exchange (with_url_hashes recipe, pruned
-        # away when the caller never reads them).
-        flagged_all = probe_bloom_jvm(
-            candidates, bloom, broadcast=True, geometry=geometry
-        )
-        deduped = flagged_all.select(
-            url_col, "part_id", "maybe_seen"
-        ).dropDuplicates([url_col])
-        flagged = (
-            deduped.withColumn("h1", F.xxhash64(F.col(url_col)))
-            .withColumn("h2", F.xxhash64(F.col(url_col), F.lit(1)))
-            .select(*candidates.columns, "maybe_seen")
-        )
-    elif mode in ("broadcast", "jvm") and slim_cols:
-        # SLIM DEDUP-FIRST path: every non-key column is a pure function of
-        # the key (the with_url_hashes contract), so dedup can run BEFORE
-        # the probe on a (url, part_id) projection — the round's one big
-        # exchange then carries the URL string plus 4 bytes instead of the
-        # URL + host + a min(struct(...)) aggregation buffer, and the
-        # Python-boundary probe runs on the deduplicated (smaller) set.
-        # h1/h2 are recomputed after the exchange with the identical
-        # with_url_hashes recipe; part_id rides through (group-constant, a
-        # FIRST aggregate — recomputing it would need n_parts, which the
-        # probe does not know). Semantically identical to probe-then-dedup:
-        # maybe_seen is itself a pure function of the URL.
-        deduped = candidates.select(url_col, "part_id").dropDuplicates(
-            [url_col]
-        )
-        rehashed = deduped.withColumn(
-            "h1", F.xxhash64(F.col(url_col))
-        ).withColumn("h2", F.xxhash64(F.col(url_col), F.lit(1)))
-        if mode == "jvm":
-            flagged = probe_bloom_jvm(
-                rehashed, bloom,
-                broadcast_max_bytes=broadcast_max_bytes, geometry=geometry,
-            ).select(*candidates.columns, "maybe_seen")
-        else:
-            flagged = probe_bloom_broadcast(rehashed, bloom).select(
-                *candidates.columns, "maybe_seen"
-            )
-    elif mode == "jvm":
-        flagged = probe_bloom_jvm(
-            candidates, bloom, dedupe_on=url_col if dedupe else None,
-            broadcast_max_bytes=broadcast_max_bytes, geometry=geometry,
-        )
-    else:
-        probe = probe_bloom_broadcast if mode == "broadcast" else probe_bloom
-        flagged = probe(
-            candidates, bloom, dedupe_on=url_col if dedupe else None
-        )
-    # the two branches below would otherwise re-execute the cogrouped
-    # Python probe (and everything upstream) once each — persist the probe
-    # output; the ContextCleaner unpersists it when the DataFrame is GC'd.
+    # the two branches below would otherwise re-execute the probe (and
+    # everything upstream) once each — persist the probe output; the
+    # ContextCleaner unpersists it when the DataFrame is GC'd.
     # LAZY persist deliberately (measured, interleaved A/B at pinned 2 and
     # 8 cores): an eager count() here costs 9-15% per round — the barrier
     # splits the round into two sequential jobs and kills stage overlap —
@@ -809,7 +404,9 @@ def filter_unseen(
     flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = maybe.join(seen_urls.select(url_col), on=url_col, how="left_anti")
+    confirmed_new = maybe.join(
+        seen_urls.select("url_canon"), on="url_canon", how="left_anti"
+    )
     return definitely_new.unionByName(confirmed_new)
 
 

@@ -132,7 +132,7 @@ def host_of_canon(canon_col: str = "url_canon") -> F.Column:
 
     Why it exists: host is a pure function of url_canon, so the frontier's
     unseen chain (probe → dedup exchange → anti-join → union) never needs
-    to CARRY it — filter_unseen's slim path moves only the URL string
+    to CARRY it — filter_unseen moves only the URL string
     through the round's one big shuffle and callers re-attach host after
     with this one-regex map. At 10^10 URLs that is ~20 bytes/row removed
     from every exchange in the chain."""

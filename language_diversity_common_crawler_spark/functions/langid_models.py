@@ -18,7 +18,7 @@ map — safe under any Arrow batching (SURVEY.md §7.3).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -109,8 +109,3 @@ def with_model_predictions(df: DataFrame, text_col: str = "text") -> DataFrame:
         out = out.withColumn(f"{p}_prec", F.col(f"_{p}.precision"))
         out = out.drop(f"_{p}")
     return out
-
-
-def prediction_struct(model: str, text_col: str | Column = "text") -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return model_udf(model)(c)

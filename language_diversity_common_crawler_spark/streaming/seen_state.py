@@ -33,7 +33,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..frontier.seen import N_PARTS, _bit_indices, with_url_hashes
+from ..frontier.seen import (
+    N_PARTS,
+    _bit_indices,
+    _probe_hashes,
+    with_url_hashes,
+)
 
 OUT_SCHEMA = StructType(
     [
@@ -93,10 +98,7 @@ def streaming_unseen_urls(
             # sequential bit-set (stable original order preserved by a
             # first-occurrence mask on the url itself)
             first_in_batch = ~pdf[url_col].duplicated().to_numpy()
-            maybe_seen = np.ones(len(pdf), dtype=bool)
-            for i in range(n_hashes):
-                idx = _bit_indices(h1, h2, i, n_bits_per_part)
-                maybe_seen &= (bits[idx >> 3] & (1 << (idx & 7)).astype(np.uint8)) != 0
+            maybe_seen = _probe_hashes(bits, n_bits_per_part, n_hashes, h1, h2)
             new_mask = (~maybe_seen) & first_in_batch
             for i in range(n_hashes):
                 idx = _bit_indices(h1, h2, i, n_bits_per_part)

@@ -85,9 +85,44 @@ def test_bloom_membership(spark):
     assert fp < 25  # 5% at default k=7, 64Ki bits/part for ~60 keys/part
 
 
-def test_probe_broadcast_matches_cogroup(spark):
-    """The shuffle-free broadcast probe and the hash-range cogroup probe
-    must flag the identical maybe_seen set (same bitsets, same hash math)."""
+def _reference_flags(cand, bloom):
+    """url -> maybe_seen from the numpy reference (_probe_hashes) over the
+    collected words; a part with no filter row flags nothing."""
+    parts = {
+        r["part_id"]: (
+            np.asarray(r["words"], dtype="<i8").view(np.uint8),
+            r["n_bits"], r["n_hashes"],
+        )
+        for r in bloom.collect()
+    }
+    out = {}
+    for r in cand.collect():
+        ent = parts.get(r["part_id"])
+        out[r["url_canon"]] = ent is not None and bool(
+            seen._probe_hashes(
+                *ent,
+                np.array([r["h1"]], dtype=np.int64).view(np.uint64),
+                np.array([r["h2"]], dtype=np.int64).view(np.uint64),
+            )[0]
+        )
+    return out
+
+
+# (BROADCAST_MAX_BYTES, join node the probe must plan): the module default
+# broadcasts the small test filters; 0 forces the shuffle-hash join a
+# 10^10-key filter set takes
+_JOIN_STRATEGIES = (
+    (seen.BROADCAST_MAX_BYTES, "BroadcastHashJoin"),
+    (0, "ShuffledHashJoin"),
+)
+
+
+def test_probe_jvm_matches_numpy_reference(spark, monkeypatch):
+    """The whole-stage-codegen probe must flag exactly what the numpy
+    double-hashing reference flags over the same words (ANSI-safe masked
+    int64 arithmetic reproduces the uint64 modulo), under both join
+    strategies, including hash ranges with no filter row (NULL words →
+    definitely new)."""
     urls = spark.createDataFrame(
         [(f"https://h{i % 10}.ex/p/{i % 400}",) for i in range(700)],
         ["url_canon"],
@@ -99,354 +134,130 @@ def test_probe_broadcast_matches_cogroup(spark):
         ),
         n_bits_per_part=1 << 16,
     )
-    via_cg = {
-        (r["url_canon"], r["maybe_seen"])
-        for r in seen.probe_bloom(hashed, bloom, dedupe_on="url_canon").collect()
-    }
-    via_bc = {
-        (r["url_canon"], r["maybe_seen"])
-        for r in seen.probe_bloom_broadcast(
-            hashed, bloom, dedupe_on="url_canon"
-        ).collect()
-    }
-    assert via_bc == via_cg
-    # dedupe contract holds in both paths: one row per distinct URL
-    assert len({u for u, _ in via_bc}) == len(via_bc)
-
-    # an empty-part probe (bloom covers no keys in some hash ranges) must
-    # flag nothing in those ranges rather than fail — or conservatively
-    # flag everything (which would silently defeat the bloom prefilter)
+    # a tiny filter leaves most hash ranges without a row
     tiny = seen.build_bloom(
         seen.with_url_hashes(urls.limit(1), n_parts=8), n_bits_per_part=1 << 16
     )
-    covered = {r["part_id"] for r in tiny.select("part_id").collect()}
-    out = seen.probe_bloom_broadcast(hashed, tiny).collect()
-    uncovered = [r for r in out if r["part_id"] not in covered]
-    assert uncovered, "fixture must leave some hash ranges without a filter"
-    assert all(not r["maybe_seen"] for r in uncovered)
-
-
-def test_broadcast_probe_plan_is_shuffle_free(spark):
-    """The broadcast probe's whole point: without dedup it must compile to
-    a pure map pipeline — scan/project fused into mapInArrow, zero
-    Exchange nodes (the cogroup variant necessarily shuffles by part_id)."""
-    urls = spark.range(2000).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 7).cast("string"),
-                 F.lit(".ex/p/"), F.col("id").cast("string")).alias("url_canon")
-    )
-    hashed = seen.with_url_hashes(urls, n_parts=8)
-    bloom = seen.build_bloom(
-        seen.with_url_hashes(urls.limit(500), n_parts=8),
-        n_bits_per_part=1 << 16,
-    )
-    probe = seen.probe_bloom_broadcast(hashed, bloom)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert probe.count() == 2000
-
-    cg = seen.probe_bloom(hashed, bloom)
-    cg_plan = cg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in cg_plan  # the slice-aligned path shuffles by design
-
-
-def test_probe_jvm_matches_cogroup(spark):
-    """The whole-stage-codegen probe must flag the IDENTICAL maybe_seen
-    set as the numpy cogroup probe (same bitsets, same double-hashing
-    math reproduced in ANSI-safe masked int64 arithmetic), in both its
-    broadcast-join and shuffle-hash-join variants, including hash ranges
-    with no filter row (NULL words → definitely new)."""
-    urls = spark.createDataFrame(
-        [(f"https://h{i % 10}.ex/p/{i % 400}",) for i in range(700)],
-        ["url_canon"],
-    )
-    hashed = seen.with_url_hashes(urls, n_parts=8)
-    bloom = seen.build_bloom(
-        seen.with_url_hashes(
-            urls.filter(F.xxhash64("url_canon") % 3 == 0), n_parts=8
-        ),
-        n_bits_per_part=1 << 16,
-    )
-    via_cg = {
-        (r["url_canon"], r["maybe_seen"])
-        for r in seen.probe_bloom(hashed, bloom, dedupe_on="url_canon").collect()
-    }
-    for bc in (True, False):
-        via_jvm = {
-            (r["url_canon"], r["maybe_seen"])
-            for r in seen.probe_bloom_jvm(
-                hashed, bloom, dedupe_on="url_canon", broadcast=bc
-            ).collect()
-        }
-        assert via_jvm == via_cg, f"broadcast={bc}"
-
-    # uncovered hash ranges must flag nothing (and not error): tiny filter
-    tiny = seen.build_bloom(
-        seen.with_url_hashes(urls.limit(1), n_parts=8), n_bits_per_part=1 << 16
-    )
-    covered = {r["part_id"] for r in tiny.select("part_id").collect()}
-    out = seen.probe_bloom_jvm(hashed, tiny).collect()
-    uncovered = [r for r in out if r["part_id"] not in covered]
-    assert uncovered, "fixture must leave some hash ranges without a filter"
-    assert all(not r["maybe_seen"] for r in uncovered)
+    assert tiny.count() < 8, "fixture must leave hash ranges uncovered"
+    for filt in (bloom, tiny):
+        want = _reference_flags(hashed, filt)
+        assert any(want.values()) and not all(want.values())
+        for budget, _ in _JOIN_STRATEGIES:
+            monkeypatch.setattr(seen, "BROADCAST_MAX_BYTES", budget)
+            out = seen.probe_bloom(hashed, filt).collect()
+            assert len(out) == 700, "left join must not drop or add rows"
+            assert {r["url_canon"]: r["maybe_seen"] for r in out} == want, (
+                budget
+            )
 
 
 def test_probe_jvm_merges_snapshot_plus_delta(spark):
-    """bloom_words OR-merges multiple filter rows per part in its own
-    grouped exchange, so the jvm probe over an UNMERGED snapshot+delta
-    equals the cogroup probe over merge_bloom(snapshot, delta) — and a
-    left join on part_id never duplicates candidate rows."""
+    """merge_bloom(snapshot, delta) is the per-word OR of both filters:
+    the probe over the merged set has no false negatives for keys of
+    either side, matches the numpy reference, and never duplicates
+    candidate rows."""
     urls = spark.createDataFrame(
         [(f"https://h{i % 6}.ex/p/{i}",) for i in range(400)], ["url_canon"]
     )
     hashed = seen.with_url_hashes(urls, n_parts=8)
-    snap = seen.build_bloom(
-        seen.with_url_hashes(
-            urls.filter(F.xxhash64("url_canon") % 3 == 0), n_parts=8
-        ),
-        n_bits_per_part=1 << 16,
+    snap_keys = hashed.filter(F.col("h1") % 3 == 0)
+    delta_keys = hashed.filter(F.col("h1") % 3 == 1)
+    snap = seen.build_bloom(snap_keys, n_bits_per_part=1 << 16)
+    delta = seen.build_bloom(delta_keys, n_bits_per_part=1 << 16)
+    merged = seen.merge_bloom(snap, delta)
+
+    def words(df):
+        return {
+            r["part_id"]: np.asarray(r["words"], dtype=np.int64)
+            for r in df.collect()
+        }
+
+    s, d, m = words(snap), words(delta), words(merged)
+    assert set(m) == set(s) | set(d)
+    for p, w in m.items():
+        want = s.get(p, 0) | d.get(p, 0)
+        assert np.array_equal(w, want), p
+    assert (
+        merged.agg(F.sum("n_keys")).first()[0]
+        == snap_keys.count() + delta_keys.count()
     )
-    delta = seen.build_bloom(
-        seen.with_url_hashes(
-            urls.filter(F.xxhash64("url_canon") % 3 == 1), n_parts=8
-        ),
-        n_bits_per_part=1 << 16,
-    )
-    merged_cg = {
-        (r["url_canon"], r["maybe_seen"])
-        for r in seen.probe_bloom(hashed, seen.merge_bloom(snap, delta)).collect()
+
+    out = seen.probe_bloom(hashed, merged)
+    assert out.count() == 400, "left join must not duplicate candidates"
+    inserted = {
+        r["url_canon"] for r in snap_keys.unionByName(delta_keys).collect()
     }
-    out = seen.probe_bloom_jvm(hashed, snap.unionByName(delta)).collect()
-    assert len(out) == 400, "left join must not duplicate candidates"
-    assert {(r["url_canon"], r["maybe_seen"]) for r in out} == merged_cg
+    flags = {r["url_canon"]: r["maybe_seen"] for r in out.collect()}
+    assert all(flags[u] for u in inserted), "false negative after merge"
+    assert flags == _reference_flags(hashed, merged)
 
 
-def test_probe_jvm_plan_is_codegen_only(spark):
-    """The jvm probe's contract: ZERO Python/Arrow nodes on the candidate
+def test_probe_jvm_plan_is_codegen_only(spark, monkeypatch, tmp_path):
+    """The probe's contract: ZERO Python/Arrow nodes on the candidate
     path. Broadcast variant = BroadcastHashJoin fused with the upstream
-    map (no shuffle of candidates); beyond the broadcast budget =
+    map, no shuffle of candidates; beyond the broadcast budget =
     ShuffledHashJoin on part_id, never a SortMergeJoin (a sort of the
-    10^10-row candidate side would dwarf the probe)."""
+    10^10-row candidate side would dwarf the probe). The filter is read
+    back from parquet, as a crawl round reads its committed state."""
     urls = spark.range(2000).select(
         F.concat(F.lit("https://h"), (F.col("id") % 7).cast("string"),
                  F.lit(".ex/p/"), F.col("id").cast("string")).alias("url_canon")
     )
     hashed = seen.with_url_hashes(urls, n_parts=8)
-    bloom = seen.build_bloom(
+    seen.build_bloom(
         seen.with_url_hashes(urls.limit(500), n_parts=8),
         n_bits_per_part=1 << 16,
-    )
-    for bc, join_node in ((True, "BroadcastHashJoin"), (False, "ShuffledHashJoin")):
-        probe = seen.probe_bloom_jvm(hashed, bloom, broadcast=bc)
+    ).write.parquet(str(tmp_path / "bloom"))
+    bloom = spark.read.parquet(str(tmp_path / "bloom"))
+    for budget, join_node in _JOIN_STRATEGIES:
+        monkeypatch.setattr(seen, "BROADCAST_MAX_BYTES", budget)
+        probe = seen.probe_bloom(hashed, bloom)
         plan = probe._jdf.queryExecution().executedPlan().toString()
         assert join_node in plan, plan
         assert "SortMergeJoin" not in plan, plan
-        # the only Python stage allowed is bloom_words' 8-row conversion
-        # (FlatMapGroupsInPandas on the FILTER side); the candidate side
-        # must never cross the boundary
         for bad in ("FlatMapCoGroupsInArrow", "MapInArrow", "ArrowEval",
-                    "BatchEval"):
+                    "BatchEval", "InPandas"):
             assert bad not in plan, (bad, plan)
+        if join_node == "BroadcastHashJoin":
+            exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+            assert all("BroadcastExchange" in ln for ln in exchanges), plan
         assert probe.count() == 2000
 
 
 def test_probe_jvm_geometry_guards(spark):
-    """Non-power-of-two n_bits cannot reproduce uint64 modulo in signed
-    JVM arithmetic: explicit jvm mode must refuse loudly, and auto must
-    fall back to an Arrow path and still return the exact unseen set."""
-    all_urls = spark.createDataFrame(
+    """Inputs the single probe path would get wrong are refused loudly:
+    a bitset that is not whole int64 words of power-of-two length (uint64
+    modulo is not reproducible in signed JVM arithmetic), candidates with
+    companion columns (dedup could keep any of their differing values),
+    two filter rows for one part (the join would duplicate candidates),
+    and merging filters of different geometry (false negatives)."""
+    urls = spark.createDataFrame(
         [(f"https://h{i % 5}.ex/p/{i}",) for i in range(300)], ["url_canon"]
     )
-    seen_urls = all_urls.filter(
-        F.xxhash64("url_canon") % 2 == 0
-    ).select("url_canon")
-    cand = seen.with_url_hashes(all_urls, n_parts=8)
-    odd_bloom = seen.build_bloom(
-        seen.with_url_hashes(seen_urls, n_parts=8), n_bits_per_part=96_000
-    )
-    with pytest.raises(ValueError, match="power-of-two"):
+    hashed = seen.with_url_hashes(urls, n_parts=8)
+    for n_bits in (96_000, 32, 0):
+        with pytest.raises(ValueError, match="power of two"):
+            seen.build_bloom(hashed, n_bits_per_part=n_bits)
+
+    bloom = seen.build_bloom(hashed, n_bits_per_part=1 << 12)
+    with pytest.raises(ValueError, match="exactly columns"):
         seen.filter_unseen(
-            cand, seen_urls, bloom=odd_bloom, probe_mode="jvm"
+            hashed.withColumn("host", F.lit("h0.ex")), urls, bloom
         )
-    expect = {
-        r["url_canon"]
-        for r in all_urls.join(seen_urls, "url_canon", "left_anti").collect()
-    }
-    got = {
-        r["url_canon"]
-        for r in seen.filter_unseen(
-            cand, seen_urls, bloom=odd_bloom, probe_mode="auto"
-        ).collect()
-    }
-    assert got == expect
-
-
-def test_filter_unseen_probe_modes_agree(spark):
-    """filter_unseen must return the exact unseen set under every probe
-    strategy (auto picks broadcast here — the filter is tiny)."""
-    all_urls = spark.createDataFrame(
-        [(f"https://h{i % 5}.ex/p/{i}", f"h{i % 5}.ex") for i in range(300)],
-        ["url_canon", "host"],
-    )
-    seen_urls = all_urls.filter(F.xxhash64("url_canon") % 2 == 0).select("url_canon")
-    cand = seen.with_url_hashes(all_urls, n_parts=8)
-    bloom = seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
-    expect = {
-        r["url_canon"]
-        for r in all_urls.join(seen_urls, "url_canon", "left_anti").collect()
-    }
-    for mode in ("auto", "jvm", "broadcast", "cogroup"):
-        got = {
-            r["url_canon"]
-            for r in seen.filter_unseen(
-                cand, seen_urls, bloom=bloom, dedupe=True, probe_mode=mode
-            ).collect()
-        }
-        assert got == expect, mode
-    # a sub-filter broadcast budget must force the cogroup path and still
-    # return the same set
-    got = {
-        r["url_canon"]
-        for r in seen.filter_unseen(
-            cand, seen_urls, bloom=bloom, probe_mode="auto",
-            broadcast_max_bytes=1,
-        ).collect()
-    }
-    assert got == expect
-
-
-def test_filter_unseen_words_form_state(spark):
-    """A pre-converted words-form filter (what a crawl commit writes as
-    bloom_words) must probe to the same exact unseen set as the binary
-    form, and must refuse the Arrow-only probe modes loudly."""
-    all_urls = spark.createDataFrame(
-        [(f"https://h{i % 5}.ex/p/{i % 120}",) for i in range(300)],
-        ["url_canon"],
-    )
-    seen_urls = all_urls.filter(
-        F.xxhash64("url_canon") % 2 == 0
-    ).select("url_canon").distinct()
-    cand = seen.with_url_hashes(all_urls, n_parts=8)
-    bloom = seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
-    words = seen.bloom_words(bloom)
-    expect = {
-        r["url_canon"]
-        for r in all_urls.distinct()
-        .join(seen_urls, "url_canon", "left_anti")
-        .collect()
-    }
-    for mode in ("auto", "jvm"):
-        got = {
-            r["url_canon"]
-            for r in seen.filter_unseen(
-                cand, seen_urls, bloom=words, dedupe=True, probe_mode=mode
-            ).collect()
-        }
-        assert got == expect, mode
-    with pytest.raises(ValueError, match="binary filter form"):
-        seen.filter_unseen(
-            cand, seen_urls, bloom=words, probe_mode="cogroup"
+    with pytest.raises(ValueError, match="merge_bloom"):
+        seen.filter_unseen(hashed, urls, bloom.unionByName(bloom))
+    with pytest.raises(ValueError, match="mixed filter geometries"):
+        seen.probe_bloom(
+            hashed,
+            bloom.filter("part_id < 4").unionByName(
+                seen.build_bloom(hashed, n_bits_per_part=1 << 13)
+                .filter("part_id >= 4")
+            ),
         )
-
-
-def test_filter_unseen_rejects_unknown_probe_mode(spark):
-    urls = spark.createDataFrame(
-        [("https://h0.ex/p/1", "h0.ex")], ["url_canon", "host"]
-    )
-    cand = seen.with_url_hashes(urls, n_parts=8)
-    bloom = seen.build_bloom(cand)
-    with pytest.raises(ValueError, match="probe_mode"):
-        seen.filter_unseen(
-            urls.select("url_canon"), urls.select("url_canon"),
-            bloom=bloom, probe_mode="Broadcast",
-        )
-
-
-def test_dedupe_survivor_row_matches_across_probe_paths(spark):
-    """When duplicate keys carry DIFFERING companion columns (an outlink
-    extractor attaching parent/priority), both probe paths must keep the
-    same row — the lexicographically minimal companion — so probe_mode
-    ('auto' flipping on filter size included) never changes row contents,
-    and a task retry re-electing the survivor is deterministic."""
-    rows = [
-        (f"https://h{i % 4}.ex/p/{i % 20}", f"parent{j}", 100 - j)
-        for i in range(20)
-        for j in range(3)
-    ]
-    cand = seen.with_url_hashes(
-        spark.createDataFrame(rows, ["url_canon", "parent", "priority"]),
-        n_parts=8,
-    )
-    bloom = seen.build_bloom(
-        seen.with_url_hashes(
-            spark.createDataFrame(rows[:1], ["url_canon", "parent", "priority"]),
-            n_parts=8,
-        )
-    )
-    pick = lambda df: {  # noqa: E731
-        r["url_canon"]: (r["parent"], r["priority"]) for r in df.collect()
-    }
-    via_bc = pick(seen.probe_bloom_broadcast(cand, bloom, dedupe_on="url_canon"))
-    via_cg = pick(seen.probe_bloom(cand, bloom, dedupe_on="url_canon"))
-    via_jvm = pick(seen.probe_bloom_jvm(cand, bloom, dedupe_on="url_canon"))
-    assert via_bc == via_cg
-    assert via_jvm == via_cg
-    # the survivor is the minimal (parent, priority) tuple, not arrival order
-    assert all(v == ("parent0", 100) for v in via_bc.values()), via_bc
-
-
-def test_filter_unseen_slim_dedup_first_path(spark):
-    """When candidates carry EXACTLY (url, h1, h2, part_id), broadcast mode
-    dedups BEFORE the probe on a url-only projection. The result set,
-    dedup semantics and part_id values must be identical to the generic
-    probe-then-dedup path, and the pre-join plan must contain no
-    min(struct(...)) aggregate (the slim exchange carries no payload)."""
-    all_urls = spark.createDataFrame(
-        # duplicates on purpose: i % 120 repeats
-        [(f"https://h{i % 5}.ex/p/{i % 120}",) for i in range(300)],
-        ["url_canon"],
-    )
-    seen_urls = all_urls.filter(
-        F.xxhash64("url_canon") % 2 == 0
-    ).select("url_canon").distinct()
-    cand = seen.with_url_hashes(all_urls, n_parts=8)
-    assert set(cand.columns) == {"url_canon", "h1", "h2", "part_id"}
-    bloom = seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
-
-    out = seen.filter_unseen(
-        cand, seen_urls, bloom=bloom, dedupe=True, probe_mode="broadcast"
-    )
-    rows = out.collect()
-    urls = [r["url_canon"] for r in rows]
-    expect = {
-        r["url_canon"]
-        for r in all_urls.distinct()
-        .join(seen_urls, "url_canon", "left_anti")
-        .collect()
-    }
-    assert set(urls) == expect
-    assert len(urls) == len(expect), "slim path must dedupe"
-    # part_id rides through the distinct and still matches the hash recipe
-    for r in rows:
-        assert r["part_id"] is not None
-    recomputed = {
-        r["url_canon"]: r["part_id"]
-        for r in seen.with_url_hashes(
-            spark.createDataFrame([(u,) for u in urls], ["url_canon"]),
-            n_parts=8,
+    with pytest.raises(Exception, match="incompatible filter geometries"):
+        seen.merge_bloom(
+            bloom, seen.build_bloom(hashed, n_bits_per_part=1 << 13)
         ).collect()
-    }
-    assert {r["url_canon"]: r["part_id"] for r in rows} == recomputed
-    # the generic min(struct(__rest)) dedup aggregate must be absent
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "__rest" not in plan, plan
-    # cogroup mode on the same slim candidates still agrees
-    got_cg = {
-        r["url_canon"]
-        for r in seen.filter_unseen(
-            cand, seen_urls, bloom=bloom, dedupe=True, probe_mode="cogroup"
-        ).collect()
-    }
-    assert got_cg == expect
 
 
 def test_host_of_canon_matches_with_canonical(spark):
@@ -464,24 +275,45 @@ def test_host_of_canon_matches_with_canonical(spark):
         assert r["host"] == r["host2"], r
 
 
-def test_filter_unseen_matches_plain_antijoin(spark):
+def test_filter_unseen_matches_plain_antijoin(spark, monkeypatch):
+    """filter_unseen equals a plain left_anti + distinct under both join
+    strategies: one row per URL, and part_id/h1/h2 still match the
+    with_url_hashes recipe after the dedup exchange."""
     all_urls = spark.createDataFrame(
-        [(f"https://h{i % 5}.ex/p/{i}", f"h{i % 5}.ex") for i in range(300)],
-        ["url_canon", "host"],
+        # duplicates on purpose: i % 120 repeats
+        [(f"https://h{i % 5}.ex/p/{i % 120}",) for i in range(300)],
+        ["url_canon"],
     )
-    seen_urls = all_urls.filter(F.xxhash64("url_canon") % 2 == 0).select("url_canon")
+    seen_urls = all_urls.filter(
+        F.xxhash64("url_canon") % 2 == 0
+    ).select("url_canon").distinct()
     cand = seen.with_url_hashes(all_urls, n_parts=8)
     bloom = seen.build_bloom(seen.with_url_hashes(seen_urls, n_parts=8))
-
-    via_bloom = {
-        r["url_canon"]
-        for r in seen.filter_unseen(cand, seen_urls, bloom=bloom).collect()
-    }
     plain = {
         r["url_canon"]
-        for r in all_urls.join(seen_urls, "url_canon", "left_anti").collect()
+        for r in all_urls.join(seen_urls, "url_canon", "left_anti")
+        .distinct()
+        .collect()
     }
-    assert via_bloom == plain
+    assert plain and len(plain) < 120
+    for budget, _ in _JOIN_STRATEGIES:
+        monkeypatch.setattr(seen, "BROADCAST_MAX_BYTES", budget)
+        out = seen.filter_unseen(cand, seen_urls, bloom)
+        assert out.columns == cand.columns
+        rows = out.collect()
+        assert len(rows) == len(plain), "must dedupe"
+        assert {r["url_canon"] for r in rows} == plain, budget
+        recomputed = {
+            r["url_canon"]: r
+            for r in seen.with_url_hashes(
+                spark.createDataFrame(
+                    [(u,) for u in plain], ["url_canon"]
+                ),
+                n_parts=8,
+            ).collect()
+        }
+        for r in rows:
+            assert r == recomputed[r["url_canon"]], r
 
 
 def test_bloom_merge(spark):
@@ -685,6 +517,21 @@ def test_crawl_metrics_lineage(spark, tmp_path):
     assert all(0.0 < r["fill_ratio"] < 1.0 for r in rows)
     assert all(0.0 <= r["est_fpp"] < 0.5 for r in rows)
     assert all(r["bloom_keys"] > 0 for r in rows)
+    # fill_ratio is popcount(words) / n_bits of the committed filter — the
+    # column perfbench reports as frontier.seen.bloom_fill_ratio
+    committed = spark.read.parquet(
+        os.path.join(ckpt, "rounds", "r=0001", "bloom")
+    ).collect()
+    assert len(committed) == len(rows)
+    by_part = {r["part_id"]: r for r in rows}
+    for b in committed:
+        words = np.asarray(b["words"], dtype="<i8")
+        fill = int(np.unpackbits(words.view(np.uint8)).sum()) / b["n_bits"]
+        assert by_part[b["part_id"]]["fill_ratio"] == fill
+        assert by_part[b["part_id"]]["bloom_keys"] == b["n_keys"]
+        assert by_part[b["part_id"]]["est_fpp"] == pytest.approx(
+            fill ** b["n_hashes"], rel=1e-12
+        )
 
 
 def test_iceberg_backend_flagging(spark):
@@ -709,8 +556,7 @@ def test_iceberg_backend_flagging(spark):
     )
 
     assert set(_SURFACE_SCHEMAS) == {
-        "frontier", "scheduled", "seen_delta", "bloom", "bloom_words",
-        "metrics",
+        "frontier", "scheduled", "seen_delta", "bloom", "metrics",
     }
 
 

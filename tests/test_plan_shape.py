@@ -314,7 +314,7 @@ def test_seen_antijoin_stays_codegen(spark, no_codegen_fallback):
 
 
 def test_jvm_bloom_probe_filter_stays_codegen(spark, no_codegen_fallback):
-    """probe_bloom_jvm output filtered on maybe_seen — the downstream
+    """probe_bloom output filtered on maybe_seen — the downstream
     filter that would re-inline the probe expression 2k times without the
     barrier on maybe_seen. Must execute with zero compile fallback and
     keep the probe inside WholeStageCodegen."""
@@ -333,7 +333,7 @@ def test_jvm_bloom_probe_filter_stays_codegen(spark, no_codegen_fallback):
         ),
         n_bits_per_part=1 << 16,
     )
-    flagged = seen.probe_bloom_jvm(hashed, bloom)
+    flagged = seen.probe_bloom(hashed, bloom)
     fresh = flagged.filter(~F.col("maybe_seen"))
     n_fresh = fresh.count()
     assert 0 < n_fresh < 400  # bloom flagged the inserted third

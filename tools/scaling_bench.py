@@ -82,7 +82,7 @@ def _gen_pages_once() -> None:
 # versioned: the prep-once guard only checks existence, so a state-SHAPE
 # change (v6: bucketed pre_seen table) must land in a fresh directory or
 # stale plain-parquet state from an older protocol would be measured
-STATE_DIR = "/tmp/scaling_state_v8"
+STATE_DIR = "/tmp/scaling_state_v9"
 
 
 def _code_fingerprint() -> str:
@@ -109,10 +109,12 @@ def _code_fingerprint() -> str:
     # before the unseen chain (recomputed from url_canon after it) and
     # broadcast-mode dedup runs BEFORE the probe on a (url, part_id)
     # projection — the round's big exchange carries only the URL string;
-    # v8 probes the committed words-form filter state (STATE_DIR/
-    # bloom_words, what crawl.run_round now reads) through the
-    # whole-stage-codegen jvm probe instead of the Arrow paths
-    h.update(b"job-v8")
+    # v8 probes a committed words-form filter state through the
+    # whole-stage-codegen probe instead of the Arrow paths;
+    # v9 reads the single committed filter table (STATE_DIR/bloom, which
+    # build_bloom now writes in words form) and runs filter_unseen's one
+    # probe-first ordering
+    h.update(b"job-v9")
     pkg = os.path.join(REPO, "language_diversity_common_crawler_spark")
     for rel in (
         "frontier/urlgen.py", "frontier/seen.py", "frontier/scheduler.py",
@@ -212,14 +214,11 @@ def _prep_state_once(mult: int) -> None:
         .saveAsTable(PRE_SEEN_TABLE)
     )
     pre = spark.table(PRE_SEEN_TABLE)
+    # the filter table a crawl commit writes (crawl.py run_round) — the
+    # timed round reads THIS, as a real round does
     seen.build_bloom(
         seen.with_url_hashes(pre, n_parts=crawl.N_PARTS)
     ).write.mode("overwrite").parquet(f"{STATE_DIR}/bloom")
-    # probe-form (words) state, same as a crawl commit writes (crawl.py
-    # run_round) — the timed round reads THIS, as a real round does
-    seen.bloom_words(
-        spark.read.parquet(f"{STATE_DIR}/bloom")
-    ).write.mode("overwrite").parquet(f"{STATE_DIR}/bloom_words")
     spark.stop()
 
 
@@ -251,8 +250,8 @@ def _pre_seen(spark):
 
 
 def _frontier_job(spark, mult: int):
-    """One timed frontier round, single linear pass: canonicalize -> dedup
-    -> bloom probe -> exact anti-join -> robots broadcast -> politeness
+    """One timed frontier round, single linear pass: canonicalize -> bloom
+    probe -> dedup -> exact anti-join -> robots broadcast -> politeness
     schedule. Returns (n_urls, n_scheduled)."""
     from pyspark.sql import functions as F
 
@@ -272,11 +271,9 @@ def _frontier_job(spark, mult: int):
         "url_canon"
     )
     pre_seen = _pre_seen(spark)
-    bloom = spark.read.parquet(f"{STATE_DIR}/bloom_words")
+    bloom = spark.read.parquet(f"{STATE_DIR}/bloom")
     cand = seen.with_url_hashes(seeds, n_parts=crawl.N_PARTS)
-    fresh = seen.filter_unseen(
-        cand, pre_seen, bloom=bloom, dedupe=True
-    ).select(
+    fresh = seen.filter_unseen(cand, pre_seen, bloom).select(
         "url_canon", urlgen.host_of_canon("url_canon").alias("host")
     )
 
