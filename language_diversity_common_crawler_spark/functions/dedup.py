@@ -72,8 +72,14 @@ def shingles_from_tokens(toks: str, dialect: str, k: int = 3) -> str:
 
 
 def shingles_expr(text: str, dialect: str, k: int = 3) -> str:
-    """Inline variant (tokenizes inside the expression — fine for oracle
-    SQL; for Spark hot paths prefer tokens_expr + shingles_from_tokens)."""
+    """Inline shingle array of raw text, for DuckDB oracle SQL only. In
+    Spark the tokenizer would sit inside the shingle lambda and re-run
+    once per shingle; Spark callers use :func:`shingle_hash60s`."""
+    if dialect != "duckdb":
+        raise ValueError(
+            "shingles_expr is DuckDB-only: in Spark it re-tokenizes the "
+            "text per shingle; use dedup.shingle_hash60s(df, ...) instead"
+        )
     return shingles_from_tokens(tokens_expr(text, dialect), dialect, k)
 
 
@@ -103,6 +109,22 @@ def shingle_hash60_expr(shingles: str, dialect: str) -> str:
     h = sql_md5_60("s", dialect)
     fn = "list_transform" if dialect == "duckdb" else "transform"
     return f"{fn}({shingles}, s -> {h})"
+
+
+def shingle_hash60s(df: DataFrame, *keep: str,
+                    text_col: str = "text") -> DataFrame:
+    """``keep`` columns plus ``__h60``, the doc's 60-bit shingle hashes
+    (array<bigint>; NULL for NULL text). Tokens, shingles and hashes are
+    separate projections: the shingle lambda reads the token array several
+    times, so CollapseProject keeps the split in its own Project and each
+    row is tokenized once, not once per shingle. Explode an expression of
+    ``__h60`` (e.g. ``array_distinct``), not the bare column: Spark infers
+    ``size(__h60) > 0`` for a bare one and pushes it below the stages."""
+    for name, e in (("__toks", tokens_expr(text_col, "spark")),
+                    ("__shg", shingles_from_tokens("__toks", "spark")),
+                    ("__h60", shingle_hash60_expr("__shg", "spark"))):
+        df = df.select(*keep, F.expr(e).alias(name))
+    return df
 
 
 def _df_capped(postings: DataFrame, key: str, max_df: int | None) -> DataFrame:
@@ -177,16 +199,10 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        n_bands: int = N_BANDS) -> DataFrame:
     """Spark: id + mh0..mh{k-1} + band0..band{b-1} (all JVM-side exprs).
     The shingle-hash array is materialized as one intermediate column so the
-    md5 pass over shingles runs once, not once per minhash."""
-    toks = df.select(
-        id_col, F.expr(tokens_expr(text_col, "spark")).alias("__toks")
-    )
-    shingled = toks.select(
-        id_col,
-        F.expr(shingles_from_tokens("__toks", "spark")).alias("__shg"),
-    )
-    hashed = shingled.select(
-        id_col, F.expr(shingle_hash_expr("__shg", "spark")).alias("__sh")
+    md5 pass over shingles runs once, not once per minhash. ``h % MH_P``
+    over the staged 60-bit hashes equals ``shingle_hash_expr``."""
+    hashed = shingle_hash60s(df, id_col, text_col=text_col).select(
+        id_col, F.expr(f"transform(__h60, h -> h % {MH_P})").alias("__sh")
     )
     out = hashed.select(
         id_col,
@@ -262,21 +278,20 @@ def jaccard_verified_pairs(
     # pairs is referenced three times below (need-a, need-b, final join)
     # and is itself the whole LSH pipeline — persist it once
     pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    toks = docs.select(
+    need = pairs.select(F.col("a").alias(id_col)).union(
+        pairs.select(F.col("b").alias(id_col))
+    ).distinct()
+    toks = docs.join(F.broadcast(need), id_col, "left_semi").select(
         F.col(id_col), F.expr(tokens_expr(text_col, "spark")).alias("__toks")
     )
+    # the pruned shingle arrays feed both the a-side and b-side joins —
+    # persist so the shingle computation runs once
     sh = toks.select(
         id_col,
         F.array_distinct(
             F.expr(shingles_from_tokens("__toks", "spark"))
         ).alias("__sh"),
-    )
-    need = pairs.select(F.col("a").alias(id_col)).union(
-        pairs.select(F.col("b").alias(id_col))
-    ).distinct()
-    # the pruned shingle arrays feed both the a-side and b-side joins —
-    # persist so the shingle computation runs once
-    sh = sh.join(F.broadcast(need), id_col).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     a = sh.select(F.col(id_col).alias("a"), F.col("__sh").alias("__sha"))
     b = sh.select(F.col(id_col).alias("b"), F.col("__sh").alias("__shb"))
     joined = pairs.join(a, "a").join(b, "b")
@@ -501,21 +516,8 @@ def ngram_jaccard_pairs(
 
     Output: (a, b, jaccard_bp) with a < b, jaccard_bp >= min_jaccard_bp.
     """
-    toks = docs.select(
-        F.col(id_col), F.expr(tokens_expr(text_col, "spark")).alias("__toks")
-    )
-    shingled = toks.select(
-        id_col,
-        F.expr(shingles_from_tokens("__toks", "spark")).alias("__shg"),
-    )
-    hashed = shingled.select(
-        id_col,
-        F.array_distinct(
-            F.expr(shingle_hash60_expr("__shg", "spark"))
-        ).alias("__sh"),
-    )
-    postings = hashed.select(
-        F.col(id_col), F.explode("__sh").alias("sh")
+    postings = shingle_hash60s(docs, id_col, text_col=text_col).select(
+        id_col, F.explode(F.array_distinct("__h60")).alias("sh")
     )
     postings = _df_capped(postings, "sh", max_df)
     # both the sizes aggregate and the two self-join sides read the capped

@@ -12,7 +12,10 @@ Estimator: with h_k the k-th smallest of the distinct hash values mapped
 into [0, 2^60), D-hat = (k-1) * 2^60 / h_k; when a group has fewer than k
 distinct hashes the sketch IS the exact set (estimate = its size).
 
-Scale shape (10^10 rows): the per-group distinct aggregate is ONE
+Scale shape (10^10 rows): the shingle stream comes from
+``dedup.shingle_hash60s``, three staged projections (tokens → shingles →
+60-bit hashes), so each document is tokenized once rather than once per
+shingle, then exploded. The per-group distinct aggregate is ONE
 hash-partitioned exchange with map-side partial dedup (exactly the first
 stage of an exact count-distinct), after which ``row_number() <= k`` with
 a constant k compiles to WindowGroupLimit — every task keeps only its
@@ -36,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import shingle_hash60_expr, shingles_expr
+from .dedup import shingle_hash60_expr, shingle_hash60s, shingles_expr
 from .hashing import HASH_SPACE
 
 KMV_K = 64
@@ -93,23 +96,14 @@ def kmv_shingle_cardinality(
         raise ValueError(
             f"prefilter_shift must be in [0, 60), got {prefilter_shift}"
         )
-    sh = docs.select(
-        group_col,
-        F.explode(
-            F.expr(shingle_hash60_expr(shingles_expr("text", "spark"),
-                                       "spark"))
-        ).alias("h"),
+    sh = shingle_hash60s(docs, group_col).select(
+        group_col, F.explode(F.array_distinct("__h60")).alias("h")
     )
-    d = sh.groupBy(group_col, "h").agg(F.lit(1).alias("_one")).drop("_one")
-    if prefilter_shift:
-        sk_src = (
-            sh.filter(F.col("h") < F.lit(HASH_SPACE >> prefilter_shift))
-            .groupBy(group_col, "h")
-            .agg(F.lit(1).alias("_one"))
-            .drop("_one")
-        )
-    else:
-        sk_src = d
+    d = sh.distinct()
+    sk_src = (
+        sh.filter(F.col("h") < F.lit(HASH_SPACE >> prefilter_shift)).distinct()
+        if prefilter_shift else d
+    )
     w = Window.partitionBy(group_col).orderBy("h")
     topk = sk_src.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= k

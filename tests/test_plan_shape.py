@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from language_diversity_common_crawler_spark.functions import dedup, sketches
 from language_diversity_common_crawler_spark.plans.pipeline import (
     extract_pipeline,
 )
@@ -380,3 +381,43 @@ def test_canonicalize_barrier_passes_range_pushdown(spark):
     scans = _scan_blocks(_formatted_plan(q))
     assert len(scans) == 1, scans
     assert "LessThan(o_orderkey,1000)" in scans[0], scans[0]
+
+
+# ---------------------------------------------------------------------------
+# shingle chains tokenize once per row
+# ---------------------------------------------------------------------------
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The argument text of every ``lambdafunction(...)`` in a plan
+    string, nested ones included."""
+    bodies, start = [], plan.find("lambdafunction(")
+    while start != -1:
+        i = j = start + len("lambdafunction(")
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[i:j - 1])
+        start = plan.find("lambdafunction(", i)
+    return bodies
+
+
+@pytest.mark.parametrize("build", [
+    pytest.param(lambda d: sketches.kmv_shingle_cardinality(d), id="kmv"),
+    pytest.param(lambda d: sketches.kmv_shingle_cardinality(
+        d, prefilter_shift=4), id="kmv_prefiltered"),
+    pytest.param(dedup.minhash_signatures, id="minhash_signatures"),
+    pytest.param(dedup.ngram_jaccard_pairs, id="ngram_jaccard_pairs"),
+])
+def test_shingle_chains_tokenize_once_per_row(spark, build):
+    """Spark does no common-subexpression elimination into lambda bodies,
+    so a tokenizer (regexp_replace + split) inside the shingle or hash
+    lambda re-runs over the whole document once per shingle. Every
+    shingle chain must keep the split in its own per-row projection —
+    including after the optimizer pushes inferred filters down."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    plan = build(docs)._jdf.queryExecution().optimizedPlan().toString()
+    bodies = _lambda_bodies(plan)
+    assert bodies, plan
+    for body in bodies:
+        assert "regexp_replace" not in body and "split(" not in body, body

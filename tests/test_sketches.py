@@ -8,6 +8,7 @@ map-side top-k relies on at scale.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 
 from language_diversity_common_crawler_spark.functions import sketches
@@ -208,8 +209,59 @@ def test_kmv_null_group_key_survives_null_safe_join(spark):
 
 
 def test_kmv_prefilter_validation(spark):
-    import pytest
-
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     with pytest.raises(ValueError, match="prefilter_shift"):
         sketches.kmv_shingle_cardinality(docs, prefilter_shift=-1)
+
+
+EDGE_ROWS = [
+    (0, None, "en"),                          # NULL text
+    (1, "", "en"),                            # empty text
+    (2, "  \t \n  ", "en"),                   # whitespace only
+    (3, "solo", "en"),                        # 1 token
+    (4, "two words", "en"),                   # 2 tokens
+    (5, "The quick  brown fox jumps", "en"),
+    (6, "alpha beta gamma", None),            # NULL group key
+    (7, None, None),
+    (8, "  one two three four  ", None),
+    (9, None, "nulls_only"),                  # group with no shingles
+    (10, "x y", "short_only"),                # group with no shingles
+    (11, "", "short_only"),
+]
+
+
+@pytest.fixture(scope="module")
+def duck():
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR,"
+                " lang VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", EDGE_ROWS)
+    return con
+
+
+@pytest.mark.parametrize("shift", [0, 4])
+def test_kmv_edge_inputs_match_duckdb(spark, duck, shift):
+    """NULL, empty, whitespace-only and 1-/2-token texts give no shingles
+    in either engine: the staged tokens → shingles → hashes chain must
+    surface the same groups (NULL group included, shingle-less groups
+    absent) with the same counts and sketch as the DuckDB twin."""
+    df = spark.createDataFrame(
+        EDGE_ROWS, "doc_id bigint, text string, lang string"
+    )
+    got = {
+        tuple(r)
+        for r in sketches.kmv_shingle_cardinality(
+            df, prefilter_shift=shift
+        ).collect()
+    }
+    want = set(duck.execute(
+        sketches.sql_kmv_shingle_cardinality(
+            "documents", prefilter_shift=shift
+        )
+    ).fetchall())
+    assert got == want
+    assert {r[0] for r in got} == {"en", None}
+    exact = {r[0]: r[-1] for r in got}
+    assert exact == {"en": 3, None: 3}
